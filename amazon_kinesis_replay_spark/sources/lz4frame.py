@@ -25,6 +25,9 @@ from __future__ import annotations
 import struct
 
 _MAGIC = b"\x04\x22\x4d\x18"
+#: skippable frames carry magics 0x184D2A50-0x184D2A5F (little-endian)
+_SKIPPABLE_MAGICS = tuple(bytes([0x50 + k]) + b"\x2a\x4d\x18"
+                          for k in range(16))
 
 
 class LZ4FrameError(ValueError):
@@ -162,6 +165,16 @@ def frame_decompress(data: bytes) -> bytes:
     out = bytearray()
     i, n = 0, len(data)
     while i < n:
+        if data[i:i + 4] in _SKIPPABLE_MAGICS:
+            # skippable frame: 4-byte magic, 4-byte LE size, opaque
+            # user data — skip it and keep decoding the frames after it
+            if i + 8 > n:
+                raise LZ4FrameError("truncated skippable frame header")
+            (size,) = struct.unpack_from("<I", data, i + 4)
+            i += 8 + size
+            if i > n:
+                raise LZ4FrameError("truncated skippable frame")
+            continue
         if data[i:i + 4] != _MAGIC:
             if i == 0:
                 raise LZ4FrameError("not an LZ4 frame (bad magic)")
@@ -311,6 +324,7 @@ _MAGICS = (
     (b"\x1f\x8b", "gzip"),
     (b"BZh", "bz2"),
     (_MAGIC, "lz4"),
+    *((m, "lz4") for m in _SKIPPABLE_MAGICS),
     (b"\xfd7zXZ\x00", "xz"),
     (b"\x28\xb5\x2f\xfd", "zstd"),      # RFC 8878, .jsonl.zst shards
 )

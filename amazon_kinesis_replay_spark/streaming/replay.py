@@ -30,8 +30,7 @@ Two emission modes:
                     (a range partition k would sleep until fraction k/N of
                     the span has elapsed — effective parallelism 1 at any
                     wall-clock instant), and no range-bounds sampling job —
-                    the emit is the batch's only scan once the anchor
-                    exists.
+                    each batch scans its source once.
 """
 
 from __future__ import annotations
@@ -399,39 +398,58 @@ class ReplayEngine:
     # -- partitioned mode: per-sender pacing at scale ------------------------
 
     def _process_partitioned(self, batch_df: DataFrame):
-        """Round-robin repartition into `sender_threads` partitions, sorted
-        within each by ts, each paced independently against the shared
-        anchor (the reference's sender fan-out: N threads draining one
-        ts-ordered queue). The sink must be worker-constructible: a
-        zero-arg factory is required.
+        """Hash-repartition into `sender_threads` partitions, sorted within
+        each by ts, each paced independently against the shared anchor
+        (the reference's sender fan-out: N threads draining one ts-ordered
+        queue). The sink must be worker-constructible: a zero-arg factory
+        is required.
 
-        ONE scan per micro-batch once the anchor exists: the emit kernel
-        is the only action, and the per-partition stats row it yields
-        carries the partition min/max ts, so the watermark (OP-AGG-MAXWM)
-        needs no separate aggregate job (the r3 min/max agg scanned every
-        batch twice). The first-ever batch runs one min-only aggregate to
-        establish the anchor — unless cfg.anchor_ts (e.g. the seek
-        position) makes even that unnecessary — a one-time cost amortized
-        over the stream."""
-        cfg = self.cfg
-        sink_factory = self.sink
-        if not callable(sink_factory):
+        Every micro-batch computes its source (the decode stage) once and
+        ends in the emit action alone. The emit kernel yields one stats
+        row per sender — counts, max ts, max lag — and the driver merges
+        those `sender_threads` rows in pandas, so the watermark
+        (OP-AGG-MAXWM) and lag (OP-AGG-LAG) need no aggregate stage or job
+        of their own. The anchoring batch — the first-ever one, unless
+        cfg.anchor_ts (e.g. the seek position) supplies the anchor — must
+        know min(ts) before any target exists: it persists its
+        (payload, ts) frame, takes the min from it, emits from the same
+        cached frame and unpersists it afterwards, so the decode is not
+        run a second time just to find the anchor."""
+        if not callable(self.sink):
             raise TypeError("partitioned mode needs a sink FACTORY "
                             "(zero-arg callable usable on executors)")
+        frame = batch_df.select("payload", "ts")
         if self._first_event_ts is None:
             anchor = self._cfg_anchor()
             if anchor is None:
-                # Anchor via Arrow toPandas, NOT collect(): collect()
-                # renders timestamps as naive HOST-LOCAL datetimes
-                # (TimestampType.fromInternal), while the Arrow kernel
-                # below receives session-tz (UTC) values — mixing the two
-                # skews every pacing target by the host's UTC offset.
-                bpdf = batch_df.agg(F.min("ts").alias("mn")).toPandas()
-                anchor = bpdf["mn"].iloc[0]
-                if anchor is None or bpdf["mn"].isna().iloc[0]:
-                    return
+                self._anchor_and_emit(frame)
+                return
             self._first_event_ts = anchor
             self._ingestion_start = self.clock()
+        self._emit_partitioned(frame)
+
+    def _anchor_and_emit(self, frame: DataFrame):
+        import pandas as pd
+        frame = frame.persist()
+        try:
+            # Anchor via Arrow toPandas, NOT collect(): collect() renders
+            # timestamps as naive HOST-LOCAL datetimes
+            # (TimestampType.fromInternal), while the Arrow kernel
+            # receives session-tz (UTC) values — mixing the two skews
+            # every pacing target by the host's UTC offset.
+            anchor = (frame.agg(F.min("ts").alias("mn"))
+                      .toPandas()["mn"].iloc[0])
+            if pd.isna(anchor):
+                return                  # empty batch: no anchor yet
+            self._first_event_ts = anchor
+            self._ingestion_start = self.clock()
+            self._emit_partitioned(frame)
+        finally:
+            frame.unpersist()
+
+    def _emit_partitioned(self, frame: DataFrame):
+        cfg = self.cfg
+        sink_factory = self.sink
         first_ts = self._first_event_ts
         ingestion_start_wall = time.time() - (self.clock() - self._ingestion_start)
         speedup = cfg.speedup_factor
@@ -443,16 +461,15 @@ class ReplayEngine:
         # leaves sender k idle until fraction k/N of the span has elapsed):
         # each sender gets a uniform slice of the whole time span, sorted
         # within, so all N senders emit on schedule concurrently.
-        shaped = (batch_df.select("payload", "ts")
-                  .repartition(cfg.sender_threads, F.col("ts"))
+        shaped = (frame.repartition(cfg.sender_threads, F.col("ts"))
                   .sortWithinPartitions("ts"))
 
         # Arrow-batched emit kernel: record bytes reach Python as columnar
         # batches, pacing targets are computed as one numpy array per Arrow
         # batch (the r3 kernel did per-row Timestamp arithmetic), and the
         # per-record sleep loop only runs for slices not yet due. One stats
-        # row per partition (counts + min/max ts) comes back through the
-        # same action — no accumulators, no second job.
+        # row per partition comes back through the same action — no
+        # accumulators, no second job.
         def _emit(batches):
             import numpy as np
             import pandas as pd
@@ -460,10 +477,16 @@ class ReplayEngine:
             part_stats = SinkStats()
             buf_p: list = []
             buf_t: list = []
+            buf_t0 = 0.0                # target of the buffer's head record
             n = 0
-            mn = mx = None
+            mx = None
+            max_lag = 0.0
 
             def _flush():
+                # request hand-off: the head record has the earliest
+                # target in the request, hence its largest lag
+                nonlocal max_lag
+                max_lag = max(max_lag, time.time() - buf_t0)  # OP-AGG-LAG
                 send_with_retry(
                     sink,
                     [{"payload": p, "ts": t} for p, t in zip(buf_p, buf_t)],
@@ -475,9 +498,7 @@ class ReplayEngine:
                 if pdf.empty:
                     continue
                 ts_col = pdf["ts"]
-                if mn is None:
-                    mn = ts_col.iloc[0]       # sorted within partition
-                mx = ts_col.iloc[-1]
+                mx = ts_col.iloc[-1]          # sorted within partition
                 offs = (ts_col - first_ts).dt.total_seconds().to_numpy()
                 targets = (ingestion_start_wall
                            + np.maximum(offs, 0.0) / speedup)
@@ -495,6 +516,8 @@ class ReplayEngine:
                             if gap > 0:
                                 time.sleep(gap)
                                 now = time.time()
+                    if not buf_p:
+                        buf_t0 = targets[i]
                     buf_p.extend(payloads[i:j])
                     buf_t.extend(iso[i:j])
                     if len(buf_p) >= max_per_request:
@@ -506,29 +529,28 @@ class ReplayEngine:
                 "n": [n], "requests": [part_stats.requests],
                 "retried": [part_stats.retried_records],
                 "sent": [part_stats.records_sent],
-                "mn": [mn], "mx": [mx]})
+                "mx": [mx], "lag": [max_lag]})
 
         # toPandas, not collect(): the mx timestamp must come back through
-        # Arrow as naive-UTC to stay comparable with driver-mode watermarks
-        tot = (shaped.mapInPandas(
+        # Arrow as naive-UTC to stay comparable with driver-mode watermarks.
+        # The merge runs on the driver over `sender_threads` rows: a Spark
+        # aggregate here would add a shuffle stage (and, under AQE, a job)
+        # to every emit action.
+        per_sender = shaped.mapInPandas(
             _emit, "n long, requests long, retried long, sent long, "
-                   "mn timestamp, mx timestamp")
-            .agg(F.sum("n").alias("n"), F.sum("requests").alias("req"),
-                 F.sum("retried").alias("ret"), F.sum("sent").alias("sent"),
-                 F.max("mx").alias("mx"))
-            .toPandas().iloc[0])
+                   "mx timestamp, lag double").toPandas()
         import pandas as pd
-
-        def _i(v):
-            return 0 if pd.isna(v) else int(v)
-        n_events = _i(tot["n"])
-        self.stats.sink.requests += _i(tot["req"])
-        self.stats.sink.retried_records += _i(tot["ret"])
-        self.stats.sink.records_sent += _i(tot["sent"])
-        batch_mx = None if pd.isna(tot["mx"]) else tot["mx"]
-        if batch_mx is not None and (self.stats.max_emitted_ts is None
-                                     or batch_mx > self.stats.max_emitted_ts):
+        n_events = int(per_sender["n"].sum())
+        self.stats.sink.requests += int(per_sender["requests"].sum())
+        self.stats.sink.retried_records += int(per_sender["retried"].sum())
+        self.stats.sink.records_sent += int(per_sender["sent"].sum())
+        batch_mx = per_sender["mx"].max()
+        if not pd.isna(batch_mx) and (self.stats.max_emitted_ts is None
+                                      or batch_mx > self.stats.max_emitted_ts):
             self.stats.max_emitted_ts = batch_mx        # OP-AGG-MAXWM
+        batch_lag = per_sender["lag"].max()
+        if batch_lag > self.stats.max_lag_s:
+            self.stats.max_lag_s = float(batch_lag)     # OP-AGG-LAG
         self.stats.tick(n_events, self.clock(),
                         cfg.statistics_frequency_ms)
 

@@ -192,6 +192,62 @@ def test_lz4_frame_roundtrip_and_multiblock():
     assert lz4frame.frame_decompress(two) == b"hello world"
 
 
+def _skippable_frame(user_data: bytes, nibble: int = 0xA) -> bytes:
+    """LZ4 skippable frame: magic 0x184D2A5<nibble>, LE size, user data."""
+    import struct
+    return (bytes([0x50 | nibble]) + b"\x2a\x4d\x18"
+            + struct.pack("<I", len(user_data)) + user_data)
+
+
+def test_lz4_skippable_frames_are_skipped_not_truncating():
+    """Skippable frames (magics 0x184D2A50-0x184D2A5F) carry metadata
+    between data frames; the decoder must step over them and keep every
+    later frame, and an object that STARTS with one is still lz4."""
+    from amazon_kinesis_replay_spark.sources import lz4frame
+
+    a = (b'{"k": 1}\n' * 3000)[:3000]
+    b = (b'{"k": 22}\n' * 4600)[:4600]
+    fa, fb = lz4frame.frame_compress(a), lz4frame.frame_compress(b)
+    assert lz4frame.frame_decompress(
+        fa + _skippable_frame(b"meta" * 50) + fb) == a + b
+    for nibble in (0x0, 0xF):
+        lead = _skippable_frame(b"x", nibble) + fa
+        assert lz4frame.sniff_codec(lead[:8]) == "lz4"
+        assert lz4frame.decompress_auto(lead) == a
+    # truncation still raises, inside or at the header of a skippable frame
+    with pytest.raises(lz4frame.LZ4FrameError, match="truncated"):
+        lz4frame.frame_decompress(fa + _skippable_frame(b"meta")[:-1])
+    with pytest.raises(lz4frame.LZ4FrameError, match="truncated"):
+        lz4frame.frame_decompress(fa + _skippable_frame(b"meta")[:6])
+    # trailing garbage after the last frame is still tolerated
+    assert lz4frame.frame_decompress(fa + b"garbage!") == a
+
+
+def test_read_events_sniffed_keeps_lines_around_skippable_frames(
+        spark, tmp_path):
+    """Through the sniffed source: an object that leads with a skippable
+    frame and one with a skippable frame between data frames both deliver
+    every line."""
+    from amazon_kinesis_replay_spark.sources import lz4frame
+
+    def lines(lo, hi):
+        return "".join(
+            json.dumps({"event_id": i,
+                        "dropoff_datetime": f"2020-01-01T00:00:{i % 60:02d}"})
+            + "\n" for i in range(lo, hi)).encode()
+
+    (tmp_path / "lead.json.lz4").write_bytes(
+        _skippable_frame(b"meta") + lz4frame.frame_compress(lines(0, 40)))
+    (tmp_path / "mid.json.lz4").write_bytes(
+        lz4frame.frame_compress(lines(40, 70)) + _skippable_frame(b"m" * 9)
+        + lz4frame.frame_compress(lines(70, 100)))
+    out = ndjson.read_events_sniffed(
+        spark, ReplayConfig(source_path=str(tmp_path)))
+    got = sorted(json.loads(r["payload"])["event_id"]
+                 for r in out.select("payload").collect())
+    assert got == list(range(100))
+
+
 def test_sniff_codec_dispatch():
     import bz2 as _bz2
     import gzip as _gzip

@@ -2,7 +2,9 @@
 Structured Streaming source -> paced foreachBatch sink, with behavioral
 assertions on ordering, batching, pacing, and statistics."""
 
+import collections
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,11 +136,13 @@ def test_partitioned_mode_replay(spark, stream_fixture, tmp_path):
 def test_partitioned_batch_is_single_computation(spark, sf_dir, tmp_path):
     """Once the anchor exists, the emit path must run exactly ONE job per
     micro-batch — the emit action itself; the watermark rides back in the
-    kernel's per-partition stats rows. The first-ever batch may add one
-    min-only aggregate to establish the anchor (and nothing else: round-
-    robin repartition has no range-sampling pass). More jobs means the
-    shuffle pipeline is being computed twice (the round-1 count()-then-emit
-    bug ran 5; the round-3 min/max agg ran the bounds scan every batch)."""
+    kernel's per-partition stats rows, merged on the driver. The first-ever
+    batch persists its (payload, ts) frame and adds one min-only aggregate
+    over it to establish the anchor; the emit then reads the cached frame
+    (and nothing else: hash repartition has no range-sampling pass). More
+    jobs means the shuffle pipeline is being computed twice (the round-1
+    count()-then-emit bug ran 5; the round-3 min/max agg ran the bounds
+    scan every batch)."""
     from amazon_kinesis_replay_spark.streaming.sinks import FileSink
     out_dir = tmp_path / "sink"
     cfg = ReplayConfig(speedup_factor=1e12, sender_threads=4,
@@ -190,6 +194,83 @@ def test_partitioned_batch_is_single_computation(spark, sf_dir, tmp_path):
     assert len(jobs) == 1, \
         f"expected 1 job with cfg.anchor_ts set, got {len(jobs)}"
     assert anchored.stats.total_events == expected_n
+
+
+# the failed-emit case below makes PySpark warn that Arrow toPandas met
+# a worker error; that error is the point of the case
+@pytest.mark.filterwarnings("ignore:toPandas attempted Arrow optimization")
+def test_anchoring_batch_computes_its_source_once(spark, tmp_path):
+    """The anchoring batch needs min(ts) before any pacing target exists.
+    Finding it must not re-run the batch's source: every input partition
+    of the first batch — here a mapInPandas stage standing in for the
+    sniffed decode — is computed exactly once across the anchor aggregate
+    and the emit, and the cache is released afterwards."""
+    from amazon_kinesis_replay_spark.streaming.sinks import FileSink
+
+    journal = tmp_path / "journal"
+    journal.mkdir()
+    journal_dir = str(journal)
+
+    def _decode(batches):
+        import uuid
+
+        import pandas as pd
+        from pyspark import TaskContext
+        pid = TaskContext.get().partitionId()
+        open(os.path.join(journal_dir, f"{pid}-{uuid.uuid4().hex}"),
+             "w").close()
+        for pdf in batches:
+            yield pdf.assign(payload=pdf["id"].astype(str),
+                             ts=pd.Timestamp("2020-01-01")
+                             + pd.to_timedelta(pdf["id"], unit="s"))[
+                ["payload", "ts"]]
+
+    parts = 3
+    batch = spark.range(0, 300, numPartitions=parts).mapInPandas(
+        _decode, "payload string, ts timestamp")
+    engine = ReplayEngine(
+        ReplayConfig(speedup_factor=1e12, sender_threads=4,
+                     max_records_per_request=100),
+        lambda: FileSink(str(tmp_path / "sink")), mode="partitioned")
+    jsc = spark.sparkContext._jsc.sc()
+    persisted = jsc.getPersistentRDDs().size()
+    engine.process_batch(batch, 0)
+
+    computed = collections.Counter(
+        name.split("-")[0] for name in os.listdir(journal_dir))
+    assert computed == {str(p): 1 for p in range(parts)}, computed
+    assert engine.stats.total_events == 300
+    assert engine.stats.sink.records_sent == 300
+    assert jsc.getPersistentRDDs().size() <= persisted
+
+    # the cache is released on an empty first batch and on a failed emit
+    empty = ReplayEngine(engine.cfg, engine.sink, mode="partitioned")
+    empty.process_batch(batch.limit(0), 0)
+    assert empty.stats.total_events == 0
+    assert jsc.getPersistentRDDs().size() <= persisted
+
+    def _broken_sink():
+        raise RuntimeError("sink unavailable")
+    failing = ReplayEngine(engine.cfg, _broken_sink, mode="partitioned")
+    with pytest.raises(Exception, match="sink unavailable"):
+        failing.process_batch(batch, 0)
+    assert jsc.getPersistentRDDs().size() <= persisted
+
+
+def test_partitioned_mode_reports_lag(spark, sf_dir, tmp_path):
+    """OP-AGG-LAG on the scale path: each sender measures how late its
+    requests are handed to the sink and the driver keeps the max. At
+    speedup 1e12 every record is due at the anchor instant, so any real
+    emit is late by at least the task launch."""
+    from amazon_kinesis_replay_spark.streaming.sinks import FileSink
+    batch = (load(spark, sf_dir, "events")
+             .select(F.col("props").alias("payload"), "ts"))
+    engine = ReplayEngine(
+        ReplayConfig(speedup_factor=1e12, sender_threads=4,
+                     max_records_per_request=100),
+        lambda: FileSink(str(tmp_path / "sink")), mode="partitioned")
+    engine.process_batch(batch, 0)
+    assert engine.stats.max_lag_s > 0
 
 
 def test_stats_windows(spark, stream_fixture, tmp_path):
