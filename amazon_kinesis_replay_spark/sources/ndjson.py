@@ -167,22 +167,9 @@ def _decode_lines(pdf_iter):
     else plain text; `.br` paths additionally try brotli, which has no
     sniffable magic). Undecodable objects are skipped — the ignoreCorruptFiles
     analogue for the binary path."""
-    import lzma
-    import zlib
-
     import pandas as pd
 
-    from ..functions.brotli import BrotliError
-    from ..functions.zstd import ZstdError
-    from .lz4frame import LZ4FrameError, decompress_auto
-
-    # Everything the stdlib decompressors raise on corrupt input: gzip ->
-    # BadGzipFile (OSError) or EOFError (truncated) or zlib.error; bz2 ->
-    # OSError/ValueError/EOFError; xz -> lzma.LZMAError (plain Exception
-    # subclass, NOT OSError). Missing any of these would fail the whole
-    # ingest job on one corrupt object instead of skipping it.
-    corrupt = (LZ4FrameError, ZstdError, BrotliError, OSError, EOFError,
-               ValueError, lzma.LZMAError, zlib.error)
+    from .lz4frame import CORRUPT_ERRORS, decompress_auto
 
     for pdf in pdf_iter:
         for path, content in zip(pdf["path"], pdf["content"]):
@@ -195,7 +182,7 @@ def _decode_lines(pdf_iter):
                 # and the malformed-JSON row is then dropped PER ROW by
                 # the parse tail, matching every other ingest path.
                 lines = text.decode("utf-8", "replace").splitlines()
-            except corrupt:
+            except CORRUPT_ERRORS:
                 continue                # corrupt object: skip whole file
             if lines:
                 yield pd.DataFrame({"value": lines,
@@ -213,9 +200,8 @@ def read_events_sniffed(spark: SparkSession, cfg: ReplayConfig,
     partitioned across executors) -> Arrow-batched mapInPandas decode ->
     the same parse tail as the text path. Whole-object rows mean the
     per-task unit is one compressed object — the same granularity as the
-    reference's per-object iterator; Python-side lz4 costs CPU, so for
-    steady-state 100 TB ingest transcode once via lz4frame.frame_compress
-    or a native codec, and keep this as the compatibility path.
+    reference's per-object iterator. Each object is decoded by a native
+    codec (`lz4frame.decompress_auto`).
     """
     reader = spark.read.format("binaryFile")
     if path_glob_filter:

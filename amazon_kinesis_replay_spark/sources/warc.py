@@ -174,10 +174,10 @@ def http_body(content: "F.Column") -> "F.Column":
 def py_http_payload(payload: bytes) -> bytes:
     """HTTP response record -> decoded body bytes: split the header
     block, then undo Content-Encoding — identity, gzip/x-gzip,
-    deflate (zlib or raw), and brotli ('br', the modern crawl default
-    — functions/brotli.py, pure Python, libbrotli-witnessed). Unknown
-    encodings return the raw body (caller-visible, never silently
-    dropped); corrupt encoded bodies raise. For use inside the same
+    deflate (zlib or raw), and brotli ('br', the modern crawl default,
+    decoded by pyarrow's bundled libbrotli). Unknown encodings return
+    the raw body (caller-visible, never silently dropped); corrupt
+    encoded bodies raise. For use inside the same
     Arrow-batched kernels as py_strip_html."""
     idx = payload.find(b"\r\n\r\n")
     if idx < 0:
@@ -201,23 +201,20 @@ def py_http_payload(payload: bytes) -> bytes:
         except zlib.error:
             return zlib.decompress(body, -15)    # raw-deflate servers
     if enc == "br":
-        from ..functions.brotli import decompress as _br
-        return _br(body)
+        from .lz4frame import native_decompress
+        return native_decompress(body, "brotli")
     return body
 
 
 def _decode_bodies(batches):
     """mapInPandas kernel: HTTP response payloads -> body TEXT, undoing
-    Content-Encoding via py_http_payload (identity/gzip/deflate/br —
-    the brotli decode is the pure-Python functions/brotli.py). A record
-    whose encoded body is corrupt is SKIPPED (the ingest contract:
+    Content-Encoding via py_http_payload (identity/gzip/deflate/br). A
+    record whose encoded body is corrupt is SKIPPED (the ingest contract:
     undecodable objects never abort the job); one bad byte inside a
     valid stream substitutes U+FFFD like every other text path."""
-    import zlib
-
     import pandas as pd
 
-    from ..functions.brotli import BrotliError
+    from .lz4frame import CORRUPT_ERRORS
 
     for pdf in batches:
         ids, uris, dates, texts = [], [], [], []
@@ -226,8 +223,7 @@ def _decode_bodies(batches):
                                         pdf["warc_date"], pdf["content"]):
             try:
                 body = py_http_payload(bytes(blob))
-            except (BrotliError, OSError, EOFError, ValueError,
-                    zlib.error):
+            except CORRUPT_ERRORS:
                 continue                    # corrupt encoded body: skip
             ids.append(rid)
             uris.append(uri)

@@ -71,7 +71,6 @@ SLOW_TESTS = {
     "tests/test_pipeline_ops.py::test_simhash_incremental_matches_batch",
     "tests/test_retrieval.py::test_index_compact_generation_publish",
     "tests/test_retrieval.py::test_indexed_append_folds_batches",
-    "tests/test_sources_and_sinks.py::test_zstd_seeded_mutation_fuzz_never_crashes",
     "tests/test_sq8.py::test_ivf_sq_append_equals_full_rebuild",
     "tests/test_sq8.py::test_ivf_sq_probe_topk_batch_matches_per_query_loop",
     "tests/test_sq8.py::test_ivf_sq_retrain_policy",

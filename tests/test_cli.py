@@ -78,14 +78,15 @@ def test_cli_end_to_end_lz4_sniffed_partitioned(tmp_path):
     """The reference's default data shape end-to-end: .json.lz4 frame input
     through --codec sniff, partitioned mode, file sink — and the summary
     line reflects executor-side sends (accumulator-backed stats)."""
-    from amazon_kinesis_replay_spark.sources import lz4frame
+    import pyarrow as pa
     src = tmp_path / "src"
     src.mkdir()
     lines = "".join(
         json.dumps({"event_id": i,
                     "dropoff_datetime": f"2024-01-01T00:{i//60:02d}:{i%60:02d}"})
         + "\n" for i in range(120))
-    (src / "events.json.lz4").write_bytes(lz4frame.frame_compress(lines.encode()))
+    (src / "events.json.lz4").write_bytes(
+        pa.compress(lines.encode(), codec="lz4", asbytes=True))
     out = tmp_path / "out"
     res = subprocess.run(
         [sys.executable, "-m", "amazon_kinesis_replay_spark.cli",

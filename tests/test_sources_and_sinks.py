@@ -4,6 +4,7 @@ and the batched/retried sink loop."""
 import gzip
 import json
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -147,13 +148,20 @@ def test_chunked_500():
 
 
 # ---------------------------------------------------------------------------
-# LZ4 frame codec + content-sniffed binary source
+# LZ4 frame decode + content-sniffed binary source
 # ---------------------------------------------------------------------------
 
 
-def test_lz4_block_roundtrip_properties():
-    """Block codec round-trips across literal-only, repetitive (overlapping
-    match copies, incl. offset<matchlen RLE), and pseudo-random content."""
+def _lz4(data: bytes) -> bytes:
+    """One lz4 frame written by liblz4 (pyarrow), never by the engine."""
+    return pa.compress(data, codec="lz4", asbytes=True)
+
+
+def test_lz4_frames_roundtrip_properties():
+    """liblz4-written frames, concatenated with skippable frames before,
+    between and after them, decode through `decompress_auto` to the
+    concatenated inputs — across literal-only, repetitive (overlapping
+    match copies) and pseudo-random content."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -168,28 +176,42 @@ def test_lz4_block_roundtrip_properties():
         (b"the quick brown fox " * 40)[:777],
     ]
     for data in cases:
-        assert lz4frame.block_decompress(lz4frame.block_compress(data)) == data
+        assert lz4frame.decompress_auto(_lz4(data)) == data
 
-    @given(st.binary(max_size=4096))
+    @given(st.lists(st.tuples(st.binary(max_size=4096),
+                              st.none() | st.binary(max_size=64)),
+                    min_size=1, max_size=4),
+           st.integers(0, 15))
     @settings(max_examples=200, deadline=None)
-    def roundtrip(data):
-        assert lz4frame.block_decompress(lz4frame.block_compress(data)) == data
+    def roundtrip(parts, nibble):
+        blob = b"".join(
+            _lz4(data) + (b"" if meta is None
+                          else _skippable_frame(meta, nibble))
+            for data, meta in parts)
+        want = b"".join(data for data, _meta in parts)
+        assert lz4frame.decompress_auto(
+            _skippable_frame(b"lead", nibble) + blob) == want
+        assert lz4frame.decompress_auto(blob) == want
 
     roundtrip()
 
 
 def test_lz4_frame_roundtrip_and_multiblock():
+    import random
+
     from amazon_kinesis_replay_spark.sources import lz4frame
 
     data = (b'{"k": %d}\n' % 12345) * 10_000
-    for stored in (False, True):
-        framed = lz4frame.frame_compress(data, block_size=16_384,
-                                         store_uncompressed=stored)
+    stored = random.Random(5).randbytes(200_000)
+    # > 64 KiB: several blocks; random bytes make liblz4 store them raw
+    for blob in (data, stored):
+        framed = _lz4(blob)
         assert framed[:4] == b"\x04\x22\x4d\x18"
-        assert lz4frame.frame_decompress(framed) == data
+        assert lz4frame.frame_decompress(framed) == blob
     # concatenated frames decode as one stream (lz4-CLI cat behavior)
-    two = lz4frame.frame_compress(b"hello ") + lz4frame.frame_compress(b"world")
+    two = _lz4(b"hello ") + _lz4(b"world")
     assert lz4frame.frame_decompress(two) == b"hello world"
+    assert lz4frame.decompress_auto(two) == b"hello world"
 
 
 def _skippable_frame(user_data: bytes, nibble: int = 0xA) -> bytes:
@@ -207,7 +229,7 @@ def test_lz4_skippable_frames_are_skipped_not_truncating():
 
     a = (b'{"k": 1}\n' * 3000)[:3000]
     b = (b'{"k": 22}\n' * 4600)[:4600]
-    fa, fb = lz4frame.frame_compress(a), lz4frame.frame_compress(b)
+    fa, fb = _lz4(a), _lz4(b)
     assert lz4frame.frame_decompress(
         fa + _skippable_frame(b"meta" * 50) + fb) == a + b
     for nibble in (0x0, 0xF):
@@ -219,8 +241,11 @@ def test_lz4_skippable_frames_are_skipped_not_truncating():
         lz4frame.frame_decompress(fa + _skippable_frame(b"meta")[:-1])
     with pytest.raises(lz4frame.LZ4FrameError, match="truncated"):
         lz4frame.frame_decompress(fa + _skippable_frame(b"meta")[:6])
+    with pytest.raises(lz4frame.LZ4FrameError, match="truncated"):
+        lz4frame.decompress_auto(fa[:-2])
     # trailing garbage after the last frame is still tolerated
     assert lz4frame.frame_decompress(fa + b"garbage!") == a
+    assert lz4frame.decompress_auto(fa + fb + b"garbage!") == a + b
 
 
 def test_read_events_sniffed_keeps_lines_around_skippable_frames(
@@ -228,8 +253,6 @@ def test_read_events_sniffed_keeps_lines_around_skippable_frames(
     """Through the sniffed source: an object that leads with a skippable
     frame and one with a skippable frame between data frames both deliver
     every line."""
-    from amazon_kinesis_replay_spark.sources import lz4frame
-
     def lines(lo, hi):
         return "".join(
             json.dumps({"event_id": i,
@@ -237,10 +260,10 @@ def test_read_events_sniffed_keeps_lines_around_skippable_frames(
             + "\n" for i in range(lo, hi)).encode()
 
     (tmp_path / "lead.json.lz4").write_bytes(
-        _skippable_frame(b"meta") + lz4frame.frame_compress(lines(0, 40)))
+        _skippable_frame(b"meta") + _lz4(lines(0, 40)))
     (tmp_path / "mid.json.lz4").write_bytes(
-        lz4frame.frame_compress(lines(40, 70)) + _skippable_frame(b"m" * 9)
-        + lz4frame.frame_compress(lines(70, 100)))
+        _lz4(lines(40, 70)) + _skippable_frame(b"m" * 9)
+        + _lz4(lines(70, 100)))
     out = ndjson.read_events_sniffed(
         spark, ReplayConfig(source_path=str(tmp_path)))
     got = sorted(json.loads(r["payload"])["event_id"]
@@ -259,13 +282,13 @@ def test_sniff_codec_dispatch():
     assert lz4frame.sniff_codec(_gzip.compress(raw)[:8]) == "gzip"
     assert lz4frame.sniff_codec(_bz2.compress(raw)[:8]) == "bz2"
     assert lz4frame.sniff_codec(_lzma.compress(raw)[:8]) == "xz"
-    assert lz4frame.sniff_codec(lz4frame.frame_compress(raw)[:8]) == "lz4"
+    assert lz4frame.sniff_codec(_lz4(raw)[:8]) == "lz4"
     assert lz4frame.sniff_codec(b"\x28\xb5\x2f\xfd....") == "zstd"
     assert lz4frame.sniff_codec(raw[:8]) == "plain"
     blobs = [raw, _gzip.compress(raw), _bz2.compress(raw),
-             _lzma.compress(raw), lz4frame.frame_compress(raw)]
+             _lzma.compress(raw), _lz4(raw)]
     try:
-        compress, _a, _d = _libzstd()
+        compress, _a = _libzstd()
         blobs.append(compress(raw, 3))
     except Exception:
         pass
@@ -277,8 +300,6 @@ def test_read_events_sniffed_lz4_fixture(spark, sf_dir, tmp_path):
     """The reference's default data shape: .json.lz4 frame files round-trip
     through the binary sniffing source; mislabeled plain text falls back;
     corrupt objects are skipped; gz still works — all in one directory."""
-    from amazon_kinesis_replay_spark.sources import lz4frame
-
     rows = (load(spark, sf_dir, "events")
             .select("event_id", "ts").orderBy("ts").limit(300).collect())
 
@@ -293,12 +314,12 @@ def test_read_events_sniffed_lz4_fixture(spark, sf_dir, tmp_path):
     # lz4-CLI-framed, gzip, and PLAIN TEXT mislabeled as .lz4 (sniffing
     # must fall back rather than trust the extension)
     (tmp_path / "a.json.lz4").write_bytes(
-        lz4frame.frame_compress(ndj[0].encode()))
+        _lz4(ndj[0].encode()))
     (tmp_path / "b.json.gz").write_bytes(gzip.compress(ndj[1].encode()))
     (tmp_path / "c.json.lz4").write_bytes(ndj[2].encode())
     # corrupt lz4 frame: valid magic, truncated body -> whole file skipped
     (tmp_path / "bad.json.lz4").write_bytes(
-        lz4frame.frame_compress(b"x" * 500)[:20])
+        _lz4(b"x" * 500)[:20])
     (tmp_path / "README.md").write_text("decoy\n")
 
     cfg = ReplayConfig(source_path=str(tmp_path))
@@ -531,20 +552,21 @@ def test_lz4_block_linked_frames_decode():
     matches across block boundaries — spec-valid input that must decode,
     not be classified corrupt (r7 review). Verified against the real lz4
     CLI when present, plus a hand-crafted frame whose second block's
-    match reaches into the first."""
+    match reaches into the first (its header-checksum byte is the spec
+    value: liblz4 verifies it)."""
     import shutil
     import struct as st
     import subprocess
 
     from amazon_kinesis_replay_spark.sources.lz4frame import (
-        frame_decompress)
+        decompress_auto, frame_decompress)
 
     if shutil.which("lz4"):
         data = (b"the quick brown fox jumps over the lazy dog 0123456789\n"
                 * 3000)
         p = subprocess.run(["lz4", "-c", "-BD", "-B4"], input=data,
                            capture_output=True, check=True)
-        assert frame_decompress(p.stdout) == data
+        assert decompress_auto(p.stdout, path="x.json.lz4") == data
 
     # hand-crafted: block 1 stored, block 2's match offsets into block 1
     b1 = b"HelloWorldABCDEFGH" * 8                   # 144 bytes, stored
@@ -552,11 +574,12 @@ def test_lz4_block_linked_frames_decode():
     tail = bytes([0x50]) + b"tail!"                  # final literals
     b2 = seq + tail
     raw = (b"\x04\x22\x4d\x18"                       # magic
-           + bytes([(0b01 << 6), 0x40, 0]))          # FLG linked, BD, hdr-ck
+           + bytes([(0b01 << 6), 0x40, 0xC0]))       # FLG linked, BD, hdr-ck
     raw += st.pack("<I", len(b1) | 0x80000000) + b1  # stored block
     raw += st.pack("<I", len(b2)) + b2               # compressed block
     raw += st.pack("<I", 0)                          # EndMark
     assert frame_decompress(raw) == b1 + b1[:20] + b"tail!"
+    assert decompress_auto(raw) == b1 + b1[:20] + b"tail!"
 
 
 def test_lz4_dictionary_frame_raises_loudly():
@@ -568,13 +591,15 @@ def test_lz4_dictionary_frame_raises_loudly():
     import pytest
 
     from amazon_kinesis_replay_spark.sources.lz4frame import (
-        frame_decompress)
+        decompress_auto, frame_decompress)
     raw = (b"\x04\x22\x4d\x18"
            + bytes([(0b01 << 6) | 0x20 | 0x01, 0x40, 0])  # dict-id bit
            + st.pack("<I", 1234)                          # dict id
            + st.pack("<I", 0))
     with pytest.raises(NotImplementedError, match="dictionary"):
         frame_decompress(raw)
+    with pytest.raises(NotImplementedError, match="dictionary"):
+        decompress_auto(raw)
 
 
 def test_sniffed_ingest_replaces_bad_utf8_instead_of_dropping(spark,
@@ -668,8 +693,7 @@ def test_verify_shards_flags_same_rowcount_rewrite(spark, sf_dir, tmp_path):
 
 def _libzstd():
     """ctypes harness for the container's libzstd.so.1 — the foreign
-    witness for functions/zstd.py. Returns (compress, compress_adv,
-    decompress_ref)."""
+    writer for the zstd decode witness. Returns (compress, compress_adv)."""
     import ctypes
 
     import pytest
@@ -694,9 +718,6 @@ def _libzstd():
                                  ctypes.c_size_t, ctypes.c_char_p,
                                  ctypes.c_size_t]
     L.ZSTD_freeCCtx.argtypes = [ctypes.c_void_p]
-    L.ZSTD_decompress.restype = ctypes.c_size_t
-    L.ZSTD_decompress.argtypes = [ctypes.c_void_p, ctypes.c_size_t,
-                                  ctypes.c_char_p, ctypes.c_size_t]
 
     def compress(data, level=3):
         cap = L.ZSTD_compressBound(len(data))
@@ -720,144 +741,67 @@ def _libzstd():
         L.ZSTD_freeCCtx(ctypes.c_void_p(c))
         return buf.raw[:n]
 
-    def decompress_ref(blob, cap):
-        buf = ctypes.create_string_buffer(max(cap, 1))
-        n = L.ZSTD_decompress(buf, cap, blob, len(blob))
-        assert not L.ZSTD_isError(n), hex(n)
-        return buf.raw[:n]
-
-    return compress, compress_adv, decompress_ref
+    return compress, compress_adv
 
 
 def test_zstd_decoder_matches_libzstd():
-    """RFC 8878 witness: streams produced by libzstd across levels
-    1..19 and content classes (empty / tiny / single-byte runs /
-    random / word-soup text incl. multi-block >128 KiB / periodic)
-    decode byte-exact — with DECODE-PATH COVERAGE ASSERTED via the
-    module's stats hook (raw+RLE+compressed blocks, raw + compressed +
-    treeless literals, 1- and 4-stream Huffman, FSE-compressed weight
-    descriptions, all four LL/OF/ML table modes). Checksum frames
-    verify and tampering raises; multi-frame and skippable-frame
-    streams concatenate; truncation raises; the dictionary-id flag
-    raises NotImplementedError; the predefined FSE distributions are
-    byte-compared against libzstd's own in-binary copies."""
-    import collections
+    """RFC 8878 witness for the native decode path: streams produced by
+    libzstd across levels 1/3/9/19 and content classes (empty / tiny /
+    single-byte runs / random / word-soup text incl. multi-block >128 KiB
+    / periodic) decode byte-exact through `decompress_auto`. Checksum
+    frames verify and tampering raises; multi-frame and skippable-frame
+    streams concatenate; truncation raises; a dictionary-id frame raises
+    an error the ingest path skips."""
     import os
     import random
     import struct
 
     import pytest
 
-    import amazon_kinesis_replay_spark.functions.zstd as Z
+    from amazon_kinesis_replay_spark.sources.lz4frame import (
+        CORRUPT_ERRORS, decompress_auto)
 
-    compress, compress_adv, _dref = _libzstd()
+    compress, compress_adv = _libzstd()
     rng = random.Random(1)
     words = [os.urandom(rng.randint(2, 9)) for _ in range(50)]
     cases = [b"", b"a", bytes(70000), b"\x00" * 400000,
              os.urandom(5000), b"abcdef" * 10000,
              b" ".join(rng.choice(words) for _ in range(80000))]
-    Z.stats = collections.Counter()
-    try:
-        for data in cases:
-            for level in (1, 3, 9, 19):
-                assert Z.decompress(compress(data, level)) == data
-        # treeless literals (lit_type_3) are an encoder heuristic
-        # libzstd rarely takes — covered by the crafted-frame test
-        need = {"block_0", "block_1", "block_2", "lit_type_0",
-                "lit_type_2", "lit_streams_1",
-                "lit_streams_4", "weights_fse", "seq_mode_0",
-                "seq_mode_1", "seq_mode_2", "seq_mode_3"}
-        assert need <= set(Z.stats), sorted(need - set(Z.stats))
-    finally:
-        Z.stats = None
+    for data in cases:
+        for level in (1, 3, 9, 19):
+            assert decompress_auto(compress(data, level)) == data
 
     text = b" ".join(rng.choice(words) for _ in range(60000))
     blob = compress_adv(text, 9, checksum=1)
-    assert Z.decompress(blob) == text
+    assert decompress_auto(blob) == text
     bad = bytearray(blob)
     bad[-1] ^= 0xFF
-    with pytest.raises(Z.ZstdError, match="checksum"):
-        Z.decompress(bytes(bad))
-    assert Z.decompress(compress_adv(text, 19, windowlog=10)) == text
+    with pytest.raises(CORRUPT_ERRORS, match="checksum"):
+        decompress_auto(bytes(bad))
+    assert decompress_auto(compress_adv(text, 19, windowlog=10)) == text
 
     skip = struct.pack("<II", 0x184D2A53, 5) + b"hello"
     multi = compress(text[:1000]) + skip + compress_adv(text[1000:2000],
                                                         19)
-    assert Z.decompress(multi) == text[:2000]
-    with pytest.raises(Z.ZstdError):
-        Z.decompress(blob[:len(blob) // 2])
+    assert decompress_auto(multi) == text[:2000]
+    with pytest.raises(CORRUPT_ERRORS):
+        decompress_auto(blob[:len(blob) // 2])
     dicty = bytearray(compress(text[:500]))
     dicty[4] |= 1                              # dictionary-id flag
-    with pytest.raises(NotImplementedError, match="dictionar"):
-        Z.decompress(bytes(dicty))
-
-    lib = open("/lib/x86_64-linux-gnu/libzstd.so.1", "rb").read()
-    for arr in (Z.LL_DEFAULTS, Z.ML_DEFAULTS, Z.OF_DEFAULTS):
-        assert lib.find(struct.pack(f"<{len(arr)}h", *arr)) >= 0
-
-
-def test_zstd_crafted_paths_cross_checked():
-    """The two decode paths libzstd's encoder never emits — RLE
-    literals and DIRECT (4-bit nibble) Huffman weight descriptions —
-    driven by hand-assembled frames that libzstd's DECODER must accept
-    and decode identically (so the craft is foreign-validated, not a
-    self-twin). Found while crafting: huff0 rejects non-minimal weight
-    sets (weight-1 symbols must exist, in pairs), so the direct-weights
-    fixture uses a canonical (2,1,1)+implied-3 tree."""
-    import struct
-
-    import amazon_kinesis_replay_spark.functions.zstd as Z
-
-    _c, _ca, decompress_ref = _libzstd()
-
-    def frame(blocks):
-        return struct.pack("<I", Z.ZSTD_MAGIC) + b"\x00\x00" \
-            + b"".join(blocks)
-
-    def block(body, last=1, btype=2):
-        bh = last | (btype << 1) | (len(body) << 3)
-        return bytes((bh & 0xFF, (bh >> 8) & 0xFF,
-                      (bh >> 16) & 0xFF)) + body
-
-    body = bytes([1 | (20 << 3), ord("x"), 0])   # RLE literals, 0 seqs
-    blob = frame([block(body)])
-    assert Z.decompress(blob) == b"x" * 20
-    assert decompress_ref(blob, 64) == b"x" * 20
-
-    codebits = {0: "01", 1: "000", 2: "001", 3: "1"}
-    lits = bytes([3, 3, 0, 1, 3, 2, 0, 3, 3, 0, 3, 2, 1, 3, 3, 3])
-    bits = "".join(codebits[c] for c in lits)
-    stream = int("1" + bits, 2).to_bytes((len(bits) + 8) // 8, "little")
-    comp = bytes([127 + 3, 0x21, 0x10]) + stream
-    v = 2 | (len(lits) << 4) | (len(comp) << 14)
-    body = bytes((v & 0xFF, (v >> 8) & 0xFF, (v >> 16) & 0xFF)) \
-        + comp + b"\x00"
-    blob = frame([block(body)])
-    assert Z.decompress(blob) == lits
-    assert decompress_ref(blob, 64) == lits
-
-    # TREELESS literals: block 2 reuses block 1's huffman table (the
-    # lit_type_3 path libzstd's encoder rarely emits)
-    body2 = bytes((3 | (len(lits) << 4) & 0xFF,
-                   ((3 | (len(lits) << 4) | (len(stream) << 14))
-                    >> 8) & 0xFF,
-                   ((3 | (len(lits) << 4) | (len(stream) << 14))
-                    >> 16) & 0xFF)) + stream + b"\x00"
-    blob2 = frame([block(body, last=0), block(body2, last=1)])
-    assert Z.decompress(blob2) == lits + lits
-    assert decompress_ref(blob2, 64) == lits + lits
+    with pytest.raises(CORRUPT_ERRORS, match="[Dd]ictionary"):
+        decompress_auto(bytes(dicty))
 
 
 def test_read_events_sniffed_zst_shards(spark, sf_dir, tmp_path):
     """.jsonl.zst corpus shards (the modern format The Pile / RedPajama
     ship) ingest through the content-sniffing source: libzstd-written
-    shards decode via the pure-Python decoder, a corrupt shard is
-    skipped whole, and plain text still falls back."""
+    shards decode natively, a corrupt shard is skipped whole, and plain
+    text still falls back."""
     from amazon_kinesis_replay_spark.config import ReplayConfig
     from amazon_kinesis_replay_spark.sources.ndjson import (
         read_events_sniffed)
 
-    compress, _ca, _d = _libzstd()
+    compress, _ca = _libzstd()
     rows = (load(spark, sf_dir, "events")
             .select("event_id", "ts").orderBy("ts").limit(200).collect())
 
@@ -878,39 +822,10 @@ def test_read_events_sniffed_zst_shards(spark, sf_dir, tmp_path):
     assert got.count() == len(rows)
 
 
-def test_zstd_seeded_mutation_fuzz_never_crashes():
-    """Corrupt-input robustness, fuzzed: 400 seeded bit-flips and
-    truncations of a libzstd stream must each either raise ZstdError /
-    NotImplementedError or decode to SOME bytes — never crash with a
-    foreign exception, hang, or overrun (checksum-carrying frames
-    additionally catch silent corruption, covered above)."""
-    import os
-    import random
-
-    import amazon_kinesis_replay_spark.functions.zstd as Z
-
-    compress, _ca, _d = _libzstd()
-    rng = random.Random(7)
-    words = [os.urandom(rng.randint(2, 9)) for _ in range(50)]
-    text = b" ".join(rng.choice(words) for _ in range(20000))
-    blob = compress(text, 9)
-    for trial in range(400):
-        b = bytearray(blob)
-        k = rng.randrange(len(b))
-        if trial % 2:
-            b[k] ^= 1 << rng.randrange(8)
-            mut = bytes(b)
-        else:
-            mut = bytes(b[:k])
-        try:
-            Z.decompress(mut, max_output=1 << 24)
-        except (Z.ZstdError, NotImplementedError):
-            pass
-
-
 def _libbrotli():
-    """ctypes harness for libbrotlienc/libbrotlidec — the foreign
-    witness for functions/brotli.py. Returns (compress, decompress_ref)."""
+    """ctypes harness for libbrotlienc/libbrotlidec — the independent
+    writer (and reference decoder) for the brotli decode witness.
+    Returns (compress, decompress_ref)."""
     import ctypes
 
     import pytest
@@ -951,24 +866,24 @@ def _libbrotli():
 
 
 def test_brotli_decoder_matches_libbrotli():
-    """RFC 7932 witness: streams produced by libbrotli across
-    qualities 0..11, window sizes 10..24, all three encoder modes and
-    content classes (english text with heavy static-dictionary usage,
-    random, periodic, mixed, NUL runs) decode byte-exact — with
-    decode-path coverage ASSERTED via the stats hook: compressed AND
-    raw meta-blocks, simple and complex prefix codes, multi-block-type
-    switching, context maps with the inverse-move-to-front transform,
-    and thousands of static-dictionary references incl. transformed
-    words. A hand-assembled METADATA meta-block (which encoders never
-    emit; cross-validated against libbrotli's decoder) covers the skip
-    path; truncation and garbage raise."""
-    import collections
+    """RFC 7932 witness for the native decode path: streams produced by
+    libbrotli across qualities 0..11, window sizes 10..24, all three
+    encoder modes and content classes (english text with heavy
+    static-dictionary usage, random, periodic, mixed, NUL runs) decode
+    byte-exact through `decompress_auto` on a `.br` path. A
+    hand-assembled METADATA meta-block (which encoders never emit;
+    cross-validated against libbrotli's decoder) decodes to nothing.
+    Truncated and garbage streams raise from the strict Content-Encoding
+    decoder; under a `.br` name they are not brotli and pass through
+    undecoded, never half-decoded."""
     import os
     import random
 
     import pytest
 
-    import amazon_kinesis_replay_spark.functions.brotli as B
+    from amazon_kinesis_replay_spark.sources.lz4frame import (
+        CORRUPT_ERRORS, decompress_auto)
+    from amazon_kinesis_replay_spark.sources.warc import py_http_payload
 
     compress, decompress_ref = _libbrotli()
     rng = random.Random(3)
@@ -979,52 +894,45 @@ def test_brotli_decoder_matches_libbrotli():
     def english(n):
         return b" ".join(rng.choice(eng) for _ in range(n))
 
-    B.stats = collections.Counter()
-    try:
-        for trial in range(26):
-            kind = trial % 5
-            if kind == 0:
-                data = english(rng.randint(10, 60000))
-            elif kind == 1:
-                data = os.urandom(rng.randint(0, 300000))
-            elif kind == 2:
-                out = bytearray()
-                while len(out) < 300000:
-                    k = rng.randrange(3)
-                    if k == 0:
-                        out += os.urandom(400)
-                    elif k == 1:
-                        out += english(100)
-                    else:
-                        out += bytes(rng.randrange(5)) * 300
-                data = bytes(out)
-            elif kind == 3:
-                data = bytes(rng.randrange(256)
-                             for _ in range(rng.randint(0, 300)))
-            else:
-                data = (english(50) + b"\n") * rng.randint(1, 3000)
-            blob = compress(data, rng.choice([0, 1, 2, 4, 6, 9, 11]),
-                            rng.choice([10, 16, 18, 22, 24]),
-                            rng.choice([0, 1, 2]))
-            assert B.decompress(blob) == data, trial
-        need = {"metablock_compressed", "metablock_raw", "code_simple",
-                "code_complex", "multi_block_types", "context_map",
-                "context_map_imtf", "dictionary", "dictionary_transform"}
-        assert need <= set(B.stats), sorted(need - set(B.stats))
-    finally:
-        B.stats = None
+    for trial in range(26):
+        kind = trial % 5
+        if kind == 0:
+            data = english(rng.randint(10, 60000))
+        elif kind == 1:
+            data = os.urandom(rng.randint(0, 300000))
+        elif kind == 2:
+            out = bytearray()
+            while len(out) < 300000:
+                k = rng.randrange(3)
+                if k == 0:
+                    out += os.urandom(400)
+                elif k == 1:
+                    out += english(100)
+                else:
+                    out += bytes(rng.randrange(5)) * 300
+            data = bytes(out)
+        elif kind == 3:
+            data = bytes(rng.randrange(256)
+                         for _ in range(rng.randint(0, 300)))
+        else:
+            data = (english(50) + b"\n") * rng.randint(1, 3000)
+        blob = compress(data, rng.choice([0, 1, 2, 4, 6, 9, 11]),
+                        rng.choice([10, 16, 18, 22, 24]),
+                        rng.choice([0, 1, 2]))
+        assert decompress_auto(blob, path="x.br") == data, trial
 
     # metadata meta-block craft (encoders never emit one)
     blob = bytes.fromhex("2c024d4554414403")
     assert decompress_ref(blob, 16) == b""
-    assert B.decompress(blob) == b""
+    assert decompress_auto(blob, path="x.br") == b""
 
     text = english(5000)
     blob = compress(text, 9)
-    with pytest.raises(B.BrotliError):
-        B.decompress(blob[:len(blob) // 2])
-    with pytest.raises(B.BrotliError):
-        B.decompress(b"\x1b\xff\xff\xff\xff\xff")
+    for bad in (blob[:len(blob) // 2], b"\x1b\xff\xff\xff\xff\xff"):
+        with pytest.raises(CORRUPT_ERRORS):
+            py_http_payload(b"HTTP/1.1 200 OK\r\nContent-Encoding: br"
+                            b"\r\n\r\n" + bad)
+        assert decompress_auto(bad, path="x.br") == bad
 
 
 def test_brotli_http_payload_and_br_ingest(spark, sf_dir, tmp_path):
@@ -1032,7 +940,8 @@ def test_brotli_http_payload_and_br_ingest(spark, sf_dir, tmp_path):
     br) via py_http_payload, and `.jsonl.br` shard ingest through the
     sniffing source — brotli has no magic, so the `.br` path suffix
     dispatches it (never overriding a sniffed codec); a corrupt .br
-    shard skips whole."""
+    shard contributes no rows (it is not brotli, so it passes through as
+    one garbage line, which has no timestamp)."""
     import gzip as _gzip
     import zlib as _zlib
 
@@ -1079,22 +988,49 @@ def test_brotli_http_payload_and_br_ingest(spark, sf_dir, tmp_path):
     assert got.count() == len(rows)
 
 
-def test_brotli_seeded_mutation_fuzz_never_crashes():
-    """Corrupt-input robustness for the brotli decoder (the zstd fuzz
-    contract): 400 seeded bit-flips and truncations of a libbrotli
-    stream each either raise BrotliError or decode to SOME bytes —
-    never a foreign exception, hang, or unbounded output."""
+def test_plain_ndjson_under_br_name_falls_back(spark, tmp_path):
+    """Plain NDJSON under a `.br` name is not brotli: like plain text
+    under a `.lz4` name, it passes through as text and delivers every
+    row, instead of the whole object being skipped as corrupt."""
+    from amazon_kinesis_replay_spark.sources.lz4frame import decompress_auto
+
+    text = "".join(
+        json.dumps({"event_id": i,
+                    "dropoff_datetime": f"2020-01-01T00:00:{i:02d}"})
+        + "\n" for i in range(40)).encode()
+    assert decompress_auto(text, path="x/x.jsonl.br") == text
+    (tmp_path / "x.jsonl.br").write_bytes(text)
+    out = ndjson.read_events_sniffed(
+        spark, ReplayConfig(source_path=str(tmp_path)))
+    got = sorted(json.loads(r["payload"])["event_id"]
+                 for r in out.select("payload").collect())
+    assert got == list(range(40))
+
+
+@pytest.mark.parametrize("codec", ["lz4", "zstd", "brotli"])
+def test_codec_seeded_mutation_fuzz_never_crashes(codec):
+    """Corrupt-input robustness of the native decode path, fuzzed: 2,000
+    seeded bit-flips and truncations of a library-written stream each
+    either decode to SOME bytes or raise one of `CORRUPT_ERRORS` (the
+    class the ingest kernels skip) — never a foreign exception or a
+    hang."""
     import random
 
-    import amazon_kinesis_replay_spark.functions.brotli as B
+    from amazon_kinesis_replay_spark.sources.lz4frame import (
+        CORRUPT_ERRORS, decompress_auto)
 
-    compress, _d = _libbrotli()
     rng = random.Random(7)
     eng = (b"the of and to in is was that for with data time people "
            b"work information public about").split()
     text = b" ".join(rng.choice(eng) for _ in range(8000))
-    blob = compress(text, 9)
-    for trial in range(400):
+    if codec == "lz4":
+        blob, path = _lz4(text), "x.jsonl.lz4"
+    elif codec == "zstd":
+        blob, path = _libzstd()[0](text, 9), "x.jsonl.zst"
+    else:
+        blob, path = _libbrotli()[0](text, 9), "x.jsonl.br"
+    assert decompress_auto(blob, path=path) == text
+    for trial in range(2000):
         b = bytearray(blob)
         k = rng.randrange(len(b))
         if trial % 2:
@@ -1103,8 +1039,8 @@ def test_brotli_seeded_mutation_fuzz_never_crashes():
         else:
             mut = bytes(b[:k])
         try:
-            B.decompress(mut, max_output=1 << 24)
-        except B.BrotliError:
+            decompress_auto(mut, path=path)
+        except CORRUPT_ERRORS:
             pass
 
 
@@ -1161,21 +1097,13 @@ def test_brotli_magic_collision_fallback(spark, sf_dir, tmp_path):
 def test_zstd_dictionary_frame_skipped_not_fatal(spark, sf_dir, tmp_path):
     """ADVICE r10 item 1: a spec-valid dictionary-compressed zstd frame
     is undecodable here (no dictionary support); it must SKIP like any
-    other undecodable object instead of aborting the ingest job, while
-    direct codec callers still see a loud NotImplementedError gate."""
-    import pytest
-
-    import amazon_kinesis_replay_spark.functions.zstd as Z
+    other undecodable object instead of aborting the ingest job."""
     from amazon_kinesis_replay_spark.config import ReplayConfig
     from amazon_kinesis_replay_spark.sources.ndjson import (
         read_events_sniffed)
 
     # minimal frame header with dict_flag set (magic + FHD byte)
     dict_frame = bytes.fromhex("28b52ffd") + bytes([0x01]) + b"\x00" * 8
-    with pytest.raises(NotImplementedError):
-        Z.decompress(dict_frame)
-    with pytest.raises(Z.ZstdError):        # ingest skip-tuple class
-        Z.decompress(dict_frame)
 
     rows = (load(spark, sf_dir, "events")
             .select("event_id", "ts").orderBy("ts").limit(50).collect())
@@ -1202,7 +1130,6 @@ def test_read_events_sniff_fallback_mixed_dir(spark, sf_dir, tmp_path):
 
     from amazon_kinesis_replay_spark.config import ReplayConfig
     from amazon_kinesis_replay_spark.sources import ndjson
-    from amazon_kinesis_replay_spark.sources.lz4frame import frame_compress
 
     rows = (load(spark, sf_dir, "events")
             .select("event_id", "ts").orderBy("ts").limit(90).collect())
@@ -1215,7 +1142,7 @@ def test_read_events_sniff_fallback_mixed_dir(spark, sf_dir, tmp_path):
 
     (tmp_path / "plain.jsonl").write_text(text_of(rows[:30]))
     (tmp_path / "mislabeled_lz4.json").write_bytes(
-        frame_compress(text_of(rows[30:60]).encode()))
+        _lz4(text_of(rows[30:60]).encode()))
     (tmp_path / "mislabeled_gz.jsonl").write_bytes(
         _gzip.compress(text_of(rows[60:]).encode()))
 
