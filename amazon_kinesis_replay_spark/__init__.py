@@ -25,3 +25,8 @@ This package re-expresses that surface Spark-first:
 """
 
 __version__ = "0.1.0"
+
+# Unpickling any engine kernel on an executor imports this package first.
+from .session import gate_worker_zip_invalidation  # noqa: E402
+
+gate_worker_zip_invalidation()

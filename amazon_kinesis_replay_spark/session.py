@@ -3,12 +3,16 @@
 Single place to encode the engine's execution posture: AQE on (runtime
 re-planning, skew-join handling), UTC session timezone (deterministic
 timestamp arithmetic for the DuckDB oracle), Arrow enabled (fast Pandas-UDF
-boundary for the few operators that need Python).
+boundary for the few operators that need Python). On executor Python
+workers, `gate_worker_zip_invalidation` stops CPython < 3.13 from re-reading
+pyspark.zip and the spark-core jar before every task (0.2-0.37 s a task
+on 4 vCPU).
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -38,6 +42,43 @@ ENGINE_RUNTIME_CONF = {
     # construction is a large part of every sub-second query's time.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
+
+
+def gate_worker_zip_invalidation() -> None:
+    """Inside a Spark task on CPython 3.10-3.12, make
+    `zipimporter.invalidate_caches` re-read an archive's directory only
+    when its (mtime, size, inode) changed since this importer last read it.
+
+    A reused Python worker calls `importlib.invalidate_caches()` before
+    every task (pyspark `worker_util.setup_spark_files`), and before 3.13
+    each zip finder on sys.path re-reads its whole central directory: one
+    read of pyspark.zip per imported subpackage plus the spark-core jar.
+    3.13 made that invalidation lazy; this is the same saving, kept sound
+    by the stat key. A missing archive or any OSError falls through to
+    the stdlib method. Installed once per process; on the driver
+    (no TaskContext) and on 3.13+ it does nothing."""
+    if not (3, 10) <= sys.version_info < (3, 13):
+        return
+    taskcontext = sys.modules.get("pyspark.taskcontext")
+    if taskcontext is None or taskcontext.TaskContext.get() is None:
+        return
+    import zipimport
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "stat_gated", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return reread(self)
+        key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        if getattr(self, "_dir_key", None) != key:
+            reread(self)
+            self._dir_key = key
+
+    invalidate_caches.stat_gated = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def build_spark(app_name: str = "amazon-kinesis-replay-spark",

@@ -9,7 +9,8 @@ Reference behavior being re-expressed (SURVEY §2.1):
   format Hadoop lacks, and the fall-back-to-plain-text behavior) over a
   binaryFile scan + Arrow-batched per-file decode
 - suffix file pruning          JsonEventS3Iterator.java:139-143 -> input_file_name
-  filter (+ pathGlobFilter include when the caller knows the data glob)
+  filter on the text path, binaryFile path filter ahead of the decode on the
+  sniffed paths (+ pathGlobFilter include when the caller knows the data glob)
 - corrupt-object skip          JsonEventS3Iterator.java:151-160 -> ignoreCorruptFiles
   (the reference's time-anchor reset side effect is NOT reproduced; SURVEY §1.3)
 - malformed-row drop           JsonEventS3Iterator.java:187-193 -> null-drop on
@@ -43,6 +44,16 @@ def _finish(lines: DataFrame, cfg: ReplayConfig,
         cols.append(F.col("path"))
     parsed = lines.select(*cols)
     return parsed.filter(F.col("ts").isNotNull())
+
+
+def _skip_named(files: DataFrame, cfg: ReplayConfig) -> DataFrame:
+    """Drop binaryFile rows whose path ends with `object_suffix_to_skip`
+    BEFORE any decode: the reference skips such objects by key without
+    opening them (JsonEventS3Iterator.java:139-143), so their bytes must
+    never reach the decoder, where a non-corrupt error would abort the read."""
+    if not cfg.object_suffix_to_skip:
+        return files
+    return files.filter(~F.col("path").endswith(cfg.object_suffix_to_skip))
 
 
 #: scheme://host-insensitive form for joining paths across sources
@@ -106,10 +117,8 @@ def read_events(spark: SparkSession, cfg: ReplayConfig,
                                                path_glob_filter)
     # selecting only path/length prunes the content column: the
     # binaryFile scan is a LISTING job, no bytes read
-    listing = listing_reader.load(cfg.source_path).select("path", "length")
-    if cfg.object_suffix_to_skip:
-        listing = listing.filter(
-            ~F.col("path").endswith(cfg.object_suffix_to_skip))
+    listing = _skip_named(
+        listing_reader.load(cfg.source_path).select("path", "length"), cfg)
     if sniff_fallback == "auto":
         st = listing.agg(F.sum("length").alias("b"),
                          F.count("*").alias("n")).head()
@@ -206,10 +215,9 @@ def read_events_sniffed(spark: SparkSession, cfg: ReplayConfig,
     reader = spark.read.format("binaryFile")
     if path_glob_filter:
         reader = reader.option("pathGlobFilter", path_glob_filter)
-    files = reader.load(cfg.source_path).select("path", "content")
+    files = _skip_named(
+        reader.load(cfg.source_path).select("path", "content"), cfg)
     lines = files.mapInPandas(_decode_lines, "value string, path string")
-    if cfg.object_suffix_to_skip:
-        lines = lines.filter(~F.col("path").endswith(cfg.object_suffix_to_skip))
     parsed = lines.select(
         F.col("value").alias("payload"),
         jsonf.json_attr_ts(F.col("value"), cfg.timestamp_attribute).alias("ts"),
@@ -271,12 +279,10 @@ def read_events_sampled_seek(spark: SparkSession, cfg: ReplayConfig,
     reader = spark.read.format("binaryFile")
     if path_glob_filter:
         reader = reader.option("pathGlobFilter", path_glob_filter)
-    files = reader.load(cfg.source_path).select("path", "content")
+    files = _skip_named(
+        reader.load(cfg.source_path).select("path", "content"), cfg)
     lines = files.mapInPandas(
         _decode_lines_numbered, "value string, path string, line_no long")
-    if cfg.object_suffix_to_skip:
-        lines = lines.filter(
-            ~F.col("path").endswith(cfg.object_suffix_to_skip))
 
     # per-object line counts: one row per file (metadata-scale)
     counts = {r["path"]: r["n"] for r in
@@ -344,10 +350,9 @@ def read_events_stream_sniffed(spark: SparkSession, cfg: ReplayConfig,
               .option("maxFilesPerTrigger", str(max_files_per_trigger)))
     if path_glob_filter:
         reader = reader.option("pathGlobFilter", path_glob_filter)
-    files = reader.load(cfg.source_path).select("path", "content")
+    files = _skip_named(
+        reader.load(cfg.source_path).select("path", "content"), cfg)
     lines = files.mapInPandas(_decode_lines, "value string, path string")
-    if cfg.object_suffix_to_skip:
-        lines = lines.filter(~F.col("path").endswith(cfg.object_suffix_to_skip))
     parsed = lines.select(
         F.col("value").alias("payload"),
         jsonf.json_attr_ts(F.col("value"), cfg.timestamp_attribute).alias("ts"),

@@ -1,9 +1,10 @@
 import sys
 import time
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from amazon_kinesis_replay_spark.session import build_spark  # noqa: E402
 

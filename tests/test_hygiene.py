@@ -110,6 +110,19 @@ def test_no_row_at_a_time_python_udf():
     assert not offenders, f"row-at-a-time Python UDF: {offenders}"
 
 
+def test_tests_and_tools_locate_the_checkout_from_their_file():
+    """Tests and tools derive the checkout root from `__file__`. A
+    hard-coded checkout path makes a suite or tool run from another
+    checkout silently import this one's package."""
+    root = PKG.parent
+    offenders = [f"{p.relative_to(root)}:{i + 1}"
+                 for d in ("tests", "tools")
+                 for p in sorted((root / d).rglob("*.py"))
+                 for i, line in enumerate(p.read_text().splitlines())
+                 if str(root) in line]
+    assert not offenders, f"hard-coded checkout path: {offenders}"
+
+
 def test_bench_attempt_quiet_predicate_is_steal_proof():
     """r10 verdict item 1: the burst-retry predicate must trip on
     whole-window /proc meters, not only the dodgeable mp-canary min.
@@ -120,7 +133,7 @@ def test_bench_attempt_quiet_predicate_is_steal_proof():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "bench", "/root/repo/bench.py")
+        "bench", PKG.parent / "bench.py")
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
 
@@ -163,7 +176,7 @@ def test_bench_publish_is_self_describing():
     publication (like r11's best attempt at steal 1.61%) is legible to
     the driver without forensics. Pins the source, so a refactor that
     drops the flag fails here rather than silently."""
-    src = open("/root/repo/bench.py").read()
+    src = (PKG.parent / "bench.py").read_text()
     assert '"published_attempt_quiet": _attempt_is_quiet(best)' in src
     assert '"quiet_fail_meters": _quiet_failures(best)' in src
 

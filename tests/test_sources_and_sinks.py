@@ -582,24 +582,60 @@ def test_lz4_block_linked_frames_decode():
     assert decompress_auto(raw) == b1 + b1[:20] + b"tail!"
 
 
+#: a valid lz4 frame that needs an external dictionary (FLG dict-id bit)
+_LZ4_DICT_FRAME = (b"\x04\x22\x4d\x18"
+                   + bytes([(0b01 << 6) | 0x20 | 0x01, 0x40, 0])
+                   + (1234).to_bytes(4, "little")       # dict id
+                   + (0).to_bytes(4, "little"))         # EndMark
+
+
 def test_lz4_dictionary_frame_raises_loudly():
     """A dictionary frame is VALID lz4 we cannot decode without the
     dictionary — it must raise NotImplementedError (NOT LZ4FrameError,
     which the ingest path classifies as corrupt and silently skips)."""
-    import struct as st
-
     import pytest
 
     from amazon_kinesis_replay_spark.sources.lz4frame import (
         decompress_auto, frame_decompress)
-    raw = (b"\x04\x22\x4d\x18"
-           + bytes([(0b01 << 6) | 0x20 | 0x01, 0x40, 0])  # dict-id bit
-           + st.pack("<I", 1234)                          # dict id
-           + st.pack("<I", 0))
     with pytest.raises(NotImplementedError, match="dictionary"):
-        frame_decompress(raw)
+        frame_decompress(_LZ4_DICT_FRAME)
     with pytest.raises(NotImplementedError, match="dictionary"):
-        decompress_auto(raw)
+        decompress_auto(_LZ4_DICT_FRAME)
+
+
+def test_sniffed_readers_skip_named_objects_before_decode(spark, tmp_path):
+    """OP-SRC-SKIPFILE on the sniffed readers: objects named for skipping
+    are dropped by path BEFORE decode (JsonEventS3Iterator.java:139-143
+    never opens them). A `README.md` holding a dictionary frame, which
+    the decoder refuses loudly rather than skipping as corrupt, must not
+    abort the read: the batch, sampled-seek and stream readers return
+    exactly the good object's rows."""
+    src = tmp_path / "src"
+    src.mkdir()
+    good = "".join(
+        json.dumps({"event_id": i,
+                    "dropoff_datetime": f"2024-01-01T00:00:{i:02d}"})
+        + "\n" for i in range(30))
+    (src / "events.json.lz4").write_bytes(_lz4(good.encode()))
+    (src / "README.md").write_bytes(_LZ4_DICT_FRAME)
+    cfg = ReplayConfig(source_path=str(src))
+
+    def ids(df):
+        return sorted(json.loads(r["payload"])["event_id"]
+                      for r in df.select("payload").collect())
+
+    assert ids(ndjson.read_events_sniffed(spark, cfg)) == list(range(30))
+    assert ids(ndjson.read_events_sampled_seek(
+        spark, cfg, "2024-01-01T00:00:00", skip_num_lines=1)) == list(range(30))
+    q = (ndjson.read_events_stream_sniffed(spark, cfg, max_files_per_trigger=2)
+         .writeStream.format("memory").queryName("skip_named_sniffed")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start())
+    try:
+        q.awaitTermination(120)
+        assert ids(spark.table("skip_named_sniffed")) == list(range(30))
+    finally:
+        q.stop()
 
 
 def test_sniffed_ingest_replaces_bad_utf8_instead_of_dropping(spark,

@@ -609,10 +609,12 @@ def test_composed_replay_witness_small(tmp_path):
 
     from conftest import run_load_sensitive
 
+    witness = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "replay_scale_witness.py")
+
     def body():
         out = subprocess.run(
-            [sys.executable, "/root/repo/tools/replay_scale_witness.py",
-             "/root/testdata/sf0.001", "3"],
+            [sys.executable, witness, "/root/testdata/sf0.001", "3"],
             capture_output=True, text=True, timeout=420)
         assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]
         line = [ln for ln in out.stdout.splitlines()

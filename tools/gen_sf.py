@@ -26,7 +26,7 @@ event_id/user_id shifted.
 
 Usage:
     python tools/gen_sf.py [--src /root/testdata/sf0.1] [--factor 10] \
-        [--out /root/repo/.localdata/sf1]
+        [--out <checkout>/.localdata/sf1]
 
 The output dir name should end in `sf<value>` so bench.py parses the
 scale factor from $SPARK_GRAFT_SF_DIR.
@@ -172,7 +172,9 @@ if __name__ == "__main__":
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
     ap.add_argument("--factor", type=int, default=10)
-    ap.add_argument("--out", default="/root/repo/.localdata/sf1")
+    ap.add_argument("--out", default=os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ".localdata", "sf1"))
     ap.add_argument("--preserve-stopwords", action="store_true",
                     help="identity-map EN_STOPWORDS so quality-score "
                          "signals survive tiling (see "
